@@ -15,7 +15,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from druid_hadoop_utils_spark.functions.aggregators import group_aggregate
+from druid_hadoop_utils_spark.functions.aggregators import (
+    cardinality_fields,
+    group_aggregate,
+)
 from druid_hadoop_utils_spark.functions.filters import _is_array, filter_to_column
 from druid_hadoop_utils_spark.plans.planner import load
 from druid_hadoop_utils_spark.plans.spec import LoadSpec
@@ -463,8 +466,9 @@ def druid_query(
     for a in aggs:
         inner = a.get("aggregator", a)
         need(inner.get("fieldName"), "double")
-        for fname2 in inner.get("fieldNames", []):
-            need(fname2, "string")
+        if inner.get("type") == "cardinality":
+            for fname2 in cardinality_fields(inner):
+                need(fname2, "string")
         if a.get("type") == "filtered":
             for d in filter_dims(a.get("filter")):
                 need(d, "string")

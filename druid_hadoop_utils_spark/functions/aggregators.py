@@ -68,6 +68,23 @@ def _hll_partial(col: Column, is_sketch: bool, lgk: int) -> Column:
     return F.hll_sketch_agg(col, F.lit(lgk))
 
 
+def cardinality_fields(spec: dict) -> list[str]:
+    """Columns a ``cardinality`` aggregator reads, from either spelling of
+    its field list: ``fieldNames`` (Druid 0.9) or ``fields`` (0.10+).
+    Entries are column names or default dimension specs
+    (``{"type": "default", "dimension": ...}``)."""
+    out = []
+    for f in spec.get("fieldNames") or spec.get("fields") or []:
+        if isinstance(f, dict):
+            if f.get("type", "default") != "default" or "dimension" not in f:
+                raise ValueError(
+                    f"cardinality fields take column names or default "
+                    f"dimension specs: {f!r}")
+            f = f["dimension"]
+        out.append(f)
+    return out
+
+
 def agg_expr(
     spec: dict,
     schema: StructType | DataFrame | None = None,
@@ -131,7 +148,7 @@ def agg_expr(
         )
 
     if atype == "cardinality":
-        fields = spec.get("fieldNames") or spec.get("fields") or ([field] if field else [])
+        fields = cardinality_fields(spec) or ([field] if field else [])
         if not fields:
             raise ValueError(f"cardinality needs fieldNames: {spec!r}")
         if spec.get("byRow") and len(fields) > 1:

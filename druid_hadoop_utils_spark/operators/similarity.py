@@ -928,8 +928,8 @@ def _assign_encode_udf(
         cells = np.argsort(-sims, axis=1)[:, 0].astype(np.int32)
         enc = mat
         if residual:
-            assign = np.argmax(mat @ centroids.T, axis=1)
-            enc = mat - centroids[assign]
+            # same operands as _pq_encode_udf's mat @ centroids.T
+            enc = mat - centroids[np.argmax(sims, axis=1)]
         codes = np.empty((len(mat), m), dtype=np.int32)
         for j in range(m):
             sub = enc[:, j * dsub : (j + 1) * dsub]

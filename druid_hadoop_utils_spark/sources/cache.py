@@ -17,9 +17,15 @@ whose stamp no longer matches.
 
 Why this shape at 100 TB:
 
-- **Zero data scanned on a hit**: the hit path lists one manifest
-  directory (driver-side metadata) and reads a small parquet result —
-  the raw table is never touched.
+- **Zero data scanned and zero Spark jobs on a hit**: the hit path
+  lists one manifest directory (driver-side metadata), then reads the
+  small parquet result ON THE DRIVER with pyarrow
+  (``MetaFS.read_parquet_dir``) and hands it to Spark as a local
+  relation — the raw table is never touched, and neither the schema-
+  inference job of ``spark.read.parquet`` nor a collect job runs. A
+  size guard keeps big entries off the driver: past Spark's own
+  ``spark.sql.execution.arrow.localRelationThreshold`` the entry is
+  returned as a lazy parquet scan under its footer schema instead.
 - **Correctness is structural, not TTL-based**: the stamp derives from
   the manifest set, so there is no window where a cache serves rows that
   a new publish superseded. A cache that can silently serve stale
@@ -44,10 +50,14 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from druid_hadoop_utils_spark.sources.segments import timeline_version
 
 CACHE_DIR = "_result_cache"
+
+#: parquet footer key under which Spark's writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def query_cache_key(query: dict, data_source: str) -> str:
@@ -64,6 +74,20 @@ def _entry_dir(table_root: str, data_source: str, key: str, version: str) -> str
     return os.path.join(table_root, data_source, CACHE_DIR, key, version)
 
 
+def _as_nullable(dt: DataType) -> DataType:
+    """``DataType.asNullable`` of the JVM: every field, array element and
+    map value nullable, recursively — the schema a parquet read reports."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _as_nullable(f.dataType), True,
+                                       f.metadata) for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType),
+                       True)
+    return dt
+
+
 def cached_druid_query(
     spark: SparkSession,
     table_root: str,
@@ -78,16 +102,25 @@ def cached_druid_query(
     via ``api.druid_query`` and the result is persisted atomically for
     the next caller. ``refresh=True`` recomputes and overwrites.
 
-    The returned DataFrame always reads from the cache entry (also right
-    after a miss), so hit and miss paths have identical schemas —
-    timestamps are pinned to TIMESTAMP_MICROS at write for that reason
-    (NOTES.md testdata-format section).
+    The returned DataFrame always comes from the committed cache entry
+    (also right after a miss), through one reader, so hit and miss paths
+    have identical schemas — timestamps are pinned to TIMESTAMP_MICROS
+    at write for that reason (NOTES.md testdata-format section).
+
+    The reader runs on the driver: pyarrow reads the entry (one
+    ``MetaFS.read_parquet_dir`` call) and the rows become a Spark local
+    relation whose schema is the Spark schema stored in the parquet
+    footer, made all-nullable — exactly what ``spark.read.parquet``
+    reports. Collecting such a frame launches no Spark job. The frame is
+    a SNAPSHOT of the entry: a later vacuum or ``refresh=True`` that
+    removes the entry does not affect it.
 
     The cache is for AGGREGATE-SHAPED results: the entry stores the full
-    result at the query's own selectivity. The returned frame is lazy,
-    so filters/limits composed on top still prune the cached parquet
-    scan via Catalyst — but a cached full-selectivity ``scan`` query
-    would persist (and on a naive read, re-read) everything; cache
+    result at the query's own selectivity. An entry whose footers report
+    more uncompressed bytes than ``spark.sql.execution.arrow.
+    localRelationThreshold`` is not pulled onto the driver; it comes
+    back as a lazy parquet scan under the footer schema (no inference
+    job), which a later vacuum can pull out from under — cache
     aggregates, not raw scans.
     """
     from druid_hadoop_utils_spark.api import druid_query
@@ -150,13 +183,23 @@ def cached_druid_query(
         if not fs.exists(meta_path):
             fs.put_text(meta_path, json.dumps(meta, indent=2, default=str))
     resolved = resolve_parquet_dir(fs, entry)
-    if resolved is None:
+    # the size guard is Spark's own local-relation limit
+    # (spark.sql.execution.arrow.localRelationThreshold)
+    read = None if resolved is None else fs.read_parquet_dir(
+        resolved, max_bytes=spark._jconf.arrowLocalRelationThreshold())
+    if read is None:
         # a concurrent vacuum/refresh unpublished the entry between the
         # hit check and this read — loud, not a TypeError
         raise FileNotFoundError(
             f"cache entry vanished concurrently: {entry} — retry the call"
         )
-    return spark.read.parquet(fs.spark_url(resolved))
+    footer, table = read
+    schema = _as_nullable(StructType.fromJson(json.loads(footer[_SPARK_SCHEMA_KEY])))
+    if table is None:
+        # past the local-relation threshold: a lazy scan, but under the
+        # footer schema, so no inference job
+        return spark.read.schema(schema).parquet(fs.spark_url(resolved))
+    return spark.createDataFrame(table, schema=schema)
 
 
 def vacuum_result_cache(

@@ -245,6 +245,17 @@ class MetaFS:
     def read_text(self, path: str) -> str:
         raise NotImplementedError
 
+    def read_parquet_dir(self, path: str, max_bytes: int | None = None):
+        """Read a committed parquet directory ON THE DRIVER with pyarrow
+        (no Spark job): one listing, every data file's footer, then the
+        data — unless the footers' uncompressed bytes exceed
+        ``max_bytes``. Returns ``(footer_metadata, table)``: the first
+        footer's key-value metadata and the concatenated table, or None
+        for the table when the size guard refused it. None when the
+        directory holds no data file. Data files are the ones Spark
+        reads: names not starting with ``_`` or ``.``, in name order."""
+        raise NotImplementedError
+
     def put_text(self, path: str, text: str) -> None:
         """ATOMIC single-object publish (see module docstring)."""
         raise NotImplementedError
@@ -325,6 +336,35 @@ class MetaFS:
         _bulk(self.delete_dir, paths, parallelism or self.bulk_parallelism)
 
 
+def _read_parquet_dir(filesystem, path: str, max_bytes: int | None):
+    """:meth:`MetaFS.read_parquet_dir` over a pyarrow filesystem and a
+    backend path."""
+    from contextlib import ExitStack
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    try:
+        infos = filesystem.get_file_info(pafs.FileSelector(path))
+    except FileNotFoundError:
+        return None
+    files = sorted(i.path for i in infos if i.type == pafs.FileType.File
+                   and not i.base_name.startswith(("_", ".")))
+    if not files:
+        return None
+    with ExitStack() as stack:
+        readers = [stack.enter_context(
+            pq.ParquetFile(stack.enter_context(filesystem.open_input_file(f))))
+            for f in files]
+        metadata = readers[0].metadata.metadata or {}
+        nbytes = sum(r.metadata.row_group(g).total_byte_size
+                     for r in readers for g in range(r.metadata.num_row_groups))
+        if max_bytes is not None and nbytes > max_bytes:
+            return metadata, None
+        return metadata, pa.concat_tables([r.read() for r in readers])
+
+
 def _bulk(fn, paths, parallelism: int) -> None:
     paths = list(paths)
     if len(paths) <= 1:
@@ -392,6 +432,11 @@ class LocalMetaFS(MetaFS):
     def read_text(self, path: str) -> str:
         with open(path) as f:
             return f.read()
+
+    def read_parquet_dir(self, path: str, max_bytes: int | None = None):
+        from pyarrow import fs as pafs
+
+        return _read_parquet_dir(pafs.LocalFileSystem(), path, max_bytes)
 
     def put_text(self, path: str, text: str) -> None:
         self.mkdirs(os.path.dirname(path))
@@ -483,6 +528,12 @@ class ObjectStoreSimFS(MetaFS):
     def read_text(self, path: str) -> str:
         with open(self._local(path)) as f:
             return f.read()
+
+    def read_parquet_dir(self, path: str, max_bytes: int | None = None):
+        from pyarrow import fs as pafs
+
+        return _read_parquet_dir(pafs.LocalFileSystem(), self._local(path),
+                                 max_bytes)
 
     def put_text(self, path: str, text: str) -> None:
         # simulates one atomic PUT: the object appears whole or not at
@@ -816,6 +867,9 @@ class ArrowMetaFS(MetaFS):
         with self._fs.open_input_stream(self._p(path)) as f:
             return f.read().decode()
 
+    def read_parquet_dir(self, path: str, max_bytes: int | None = None):
+        return _read_parquet_dir(self._fs, self._p(path), max_bytes)
+
     def put_text(self, path: str, text: str) -> None:
         # object stores: the PUT (close of the output stream) is atomic
         # per object. HDFS: create is not atomic — write a side file and
@@ -945,10 +999,10 @@ class DelayFS(MetaFS):
     10k manifests = 10k GETs raw vs 1 GET after compact_manifests).
 
     Charged as one RTT: ls / exists / isdir / mtime / list_files /
-    read_text / put_text / put_text_if_absent / delete_file /
-    delete_dir / rename_dir / copy_tree. Charged as ZERO: mkdirs (real
-    object stores have no directories — creating a prefix is no
-    request) and the pure path helpers.
+    read_text / read_parquet_dir / put_text / put_text_if_absent /
+    delete_file / delete_dir / rename_dir / copy_tree. Charged as ZERO:
+    mkdirs (real object stores have no directories — creating a prefix
+    is no request) and the pure path helpers.
     """
 
     def __init__(self, inner: MetaFS, delay_s: float = 0.02):
@@ -1020,6 +1074,10 @@ class DelayFS(MetaFS):
     def read_text(self, path):
         self._rt("read_text")
         return self.inner.read_text(path)
+
+    def read_parquet_dir(self, path, max_bytes=None):
+        self._rt("read_parquet_dir")
+        return self.inner.read_parquet_dir(path, max_bytes)
 
     def put_text(self, path, text):
         self._rt("put_text")

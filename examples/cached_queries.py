@@ -6,7 +6,8 @@
    miss-fill is answered by the TRANSPARENT materialized-rollup rewrite
    (api.py — raw segments never scan) and the result parquet lands in
    the timeline-stamped cache (sources/cache.py);
-3. run it again: the cache serves it — zero query execution;
+3. run it again: the cache serves it — zero query execution and zero
+   Spark jobs (the entry is read on the driver);
 4. publish a fourth day: the timeline stamp changes, so the same call
    recomputes (never serves stale rows), and after a materialize
    catch-up the refill takes the rewrite again;
@@ -65,10 +66,15 @@ def main() -> None:
     print("== miss-fill (materialized rewrite -> cache publish)")
     out = cached_druid_query(spark, root, "events", QUERY)
     out.orderBy("__time", "event_type").show()
-    assert all("_result_cache" in f for f in out.inputFiles())
+    # the entry is read on the driver: a local relation, no file scan
+    assert out.inputFiles() == []
 
-    print("== hit (served from the cache entry, nothing executes)")
-    cached_druid_query(spark, root, "events", QUERY).count()
+    print("== hit (served from the cache entry: no query, no Spark job)")
+    sc = spark.sparkContext
+    sc.setJobGroup("hit", "cache hit")
+    cached_druid_query(spark, root, "events", QUERY).collect()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("hit")) == []
 
     print("== a new publish invalidates; catch-up re-enables the rewrite")
     publish_segments(events(spark, [4]), root, "events",

@@ -65,7 +65,8 @@ hit = eng.api.druid_query(spark, root, dict(
     Q, context={"useMaterialized": "require"}))
 hit.orderBy("__time", "event_type").show()
 
-# the result cache: second call reads one small parquet, zero data scan
+# the result cache: the second call reads one small parquet on the
+# driver — zero data scan, zero Spark jobs
 cached_druid_query(spark, root, "ev", Q).count()
 print("cache hit rows:", cached_druid_query(spark, root, "ev", Q).count())
 

@@ -566,3 +566,107 @@ def test_compaction_invalidates_cache_and_states_lifecycle(spark, table):
     hit = druid_query(spark, table, dict(q, context={"useMaterialized": "require"}))
     assert _rows(hit) == before
     assert all("_materialized" in f for f in hit.inputFiles())
+
+
+# ------------------------------------------- driver-side hit path
+
+
+def _jobs_in(spark, group, fn):
+    """(fn's return value, Spark job ids launched while it ran), counted
+    with a job group and the status tracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cache_hit_launches_no_spark_job(spark, table):
+    q = _q(context={"useMaterialized": False})
+    miss_rows, miss_jobs = _jobs_in(
+        spark, "cache-miss", lambda: _rows(cached_druid_query(spark, table, "ev", q)))
+    assert miss_jobs  # the fill runs the query: the counter sees jobs
+    hit_rows, hit_jobs = _jobs_in(
+        spark, "cache-hit", lambda: _rows(cached_druid_query(spark, table, "ev", q)))
+    assert hit_rows == miss_rows and len(hit_rows) == 6
+    assert hit_jobs == []  # neither schema inference nor the collect
+
+
+@pytest.fixture()
+def typed_table(spark, tmp_path, golden_events):
+    """Table with a timestamp, a multi-value array<string> dimension, a
+    long metric and a binary HLL sketch column."""
+    root = str(tmp_path / "typed")
+    publish_segments(golden_events, root, "g", version="v1",
+                     time_column="__time", bucket="DAY")
+    return root
+
+
+@pytest.mark.parametrize("query", [
+    # raw rows: timestamp, array<string>, long, string, binary sketch
+    {"queryType": "scan", "intervals": ["2014-10-22/2014-10-23"]},
+    # aggregate over the multi-value dim with the sketch merged, unfinalized
+    {"queryType": "groupBy", "intervals": ["2014-10-22/2014-10-23"],
+     "granularity": "HOUR", "dimensions": ["host"],
+     "aggregations": [{"type": "longSum", "name": "v", "fieldName": "visited_sum"},
+                      {"type": "hyperUnique", "name": "u",
+                       "fieldName": "unique_hosts"}]},
+    # empty result: an interval with no segment
+    {"queryType": "groupBy", "intervals": ["2020-01-01/2020-01-02"],
+     "granularity": "DAY", "dimensions": ["host"],
+     "aggregations": [{"type": "count", "name": "n"}]},
+], ids=["scan-typed", "groupby-mv-sketch", "empty"])
+def test_cache_hit_equals_miss_per_column_type(spark, typed_table, query):
+    q = dict(query, dataSource="g")
+    direct = druid_query(spark, typed_table, q)
+    miss = cached_druid_query(spark, typed_table, "g", q)
+    hit = cached_druid_query(spark, typed_table, "g", q)
+    assert hit.schema == miss.schema
+    assert _rows(hit) == _rows(miss) == _rows(direct)
+    # the only schema change from the direct frame is parquet's
+    # all-nullable read
+    assert [(f.name, f.dataType.simpleString()) for f in hit.schema] == \
+        [(f.name, f.dataType.simpleString()) for f in direct.schema]
+    assert all(f.nullable for f in hit.schema)
+
+
+def test_cache_hit_frame_is_a_snapshot(spark, table):
+    """A frame returned by a hit keeps its rows after the entry it came
+    from is removed — by ``refresh=True`` or by ``vacuum_result_cache``
+    once a publish made the entry stale."""
+    q = _q()
+    truth = _rows(cached_druid_query(spark, table, "ev", q))
+    held = cached_druid_query(spark, table, "ev", q)
+    fresh = cached_druid_query(spark, table, "ev", q, refresh=True)
+    assert _rows(held) == truth == _rows(fresh)
+
+    held = cached_druid_query(spark, table, "ev", q)
+    publish_segments(_events(spark, [2]), table, "ev", version="v2",
+                     time_column="ts", bucket="DAY")
+    assert len(vacuum_result_cache(table, "ev")) == 1
+    assert _rows(held) == truth
+
+
+def test_cache_entry_over_local_relation_threshold_is_lazy_scan(spark, table):
+    """Past ``spark.sql.execution.arrow.localRelationThreshold`` the
+    entry is not read on the driver: the call returns a lazy parquet scan
+    under the footer schema — no job before the action (no schema
+    inference) — with the same rows and schema as the driver read."""
+    q = _q()
+    small = cached_druid_query(spark, table, "ev", q)
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1b")
+    try:
+        big, jobs = _jobs_in(spark, "cache-big",
+                             lambda: cached_druid_query(spark, table, "ev", q))
+        assert jobs == []
+        assert big.inputFiles() and all(
+            "_result_cache" in f for f in big.inputFiles())
+        assert big.schema == small.schema
+        assert _rows(big) == _rows(small)
+    finally:
+        spark.conf.set(key, prev)
+    assert small.inputFiles() == []  # the driver read is a local relation

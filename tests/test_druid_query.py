@@ -732,3 +732,41 @@ def test_segment_metadata_analysis_on_nanos_time_table(spark, tmp_path):
     rows = {r.column: r for r in druid_query(spark, str(tmp_path), q).collect()}
     assert rows["host"].cardinality == 2
     assert rows["visited_sum"].min_value == "100"
+
+
+@pytest.mark.parametrize("fields", [
+    ["user_id"],
+    [{"type": "default", "dimension": "user_id", "outputName": "u"}],
+])
+def test_cardinality_fields_spelling_equals_field_names(spark, events, fields):
+    """Druid 0.10+ spells the cardinality field list ``fields`` (names or
+    dimension specs); the scan must carry those columns exactly as it
+    does for the 0.9 ``fieldNames`` spelling."""
+    def q(agg):
+        return {"queryType": "groupBy", "dataSource": "events",
+                "intervals": ["2024-01-01/2024-02-01"], "granularity": "DAY",
+                "dimensions": ["event_type"],
+                "aggregations": [dict({"type": "cardinality", "name": "card"},
+                                      **agg)]}
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    by_names = druid_query(spark, events, q({"fieldNames": ["user_id"]}),
+                           time_column="ts")
+    by_fields = druid_query(spark, events, q({"fields": fields}),
+                            time_column="ts")
+    assert rows(by_fields) == rows(by_names)
+    assert by_fields.schema == by_names.schema
+    assert rows(by_names)
+
+
+def test_cardinality_rejects_extraction_dimension_spec(spark, events):
+    q = {"queryType": "groupBy", "dataSource": "events",
+         "intervals": ["2024-01-01/2024-02-01"], "granularity": "ALL",
+         "dimensions": ["event_type"],
+         "aggregations": [{"type": "cardinality", "name": "card", "fields": [
+             {"type": "extraction", "dimension": "user_id",
+              "extractionFn": {"type": "substring", "index": 0, "length": 1}}]}]}
+    with pytest.raises(ValueError, match="default dimension specs"):
+        druid_query(spark, events, q, time_column="ts")

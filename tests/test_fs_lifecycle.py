@@ -515,3 +515,74 @@ def test_tag_restore_clone_lifecycle_no_rename(spark, objroot, tmp_path):
     clone_view(spark, objroot, "ev", dest)
     got = load(spark, dest, spec, interval=iv, data_source="ev")
     assert round(got.agg(F.sum("value")).first()[0], 2) == want
+
+
+# ------------------------------------------- driver-side parquet reads
+
+
+@pytest.mark.parametrize("fs_kind", ["local", "objectsim", "arrowsim"])
+def test_read_parquet_dir_backends(spark, tmp_path, fs_kind):
+    """``read_parquet_dir`` reads a published parquet dir on the driver
+    on every backend: Spark's footer schema key, every row, the size
+    guard refusing the data but keeping the footer, None for no data."""
+    # the local backend renames its publishes: keep it off the
+    # no-rename root the autouse spy guards
+    local = tmp_path / ("posix" if fs_kind == "local" else "objstore")
+    local.mkdir()
+    root = str(local) if fs_kind == "local" else f"{fs_kind}://{local}"
+    fs = get_fs(root)
+    dest = fs.join(root, "out.parquet")
+    df = spark.range(10).withColumn("v", F.col("id") * 2).repartition(3)
+    publish_parquet_dir(fs, lambda u: df.write.parquet(u), dest)
+    phys = resolve_parquet_dir(fs, dest)
+
+    footer, table = fs.read_parquet_dir(phys)
+    assert b"org.apache.spark.sql.parquet.row.metadata" in footer
+    assert sorted(zip(table.column("id").to_pylist(),
+                      table.column("v").to_pylist())) == \
+        [(i, 2 * i) for i in range(10)]
+    footer2, refused = fs.read_parquet_dir(phys, max_bytes=1)
+    assert refused is None and footer2 == footer
+    assert fs.read_parquet_dir(fs.join(root, "missing")) is None
+
+
+def test_delay_fs_read_parquet_dir_is_one_round_trip(spark, tmp_path):
+    from druid_hadoop_utils_spark.sources.fs import DelayFS
+
+    inner = ObjectStoreSimFS()
+    root = "objectsim://" + str(tmp_path / "objstore")
+    dest = inner.join(root, "out.parquet")
+    publish_parquet_dir(inner, lambda u: spark.range(4).write.parquet(u), dest)
+    fs = DelayFS(inner, delay_s=0)
+    _footer, table = fs.read_parquet_dir(resolve_parquet_dir(inner, dest))
+    assert table.num_rows == 4
+    assert fs.op_counts == {"read_parquet_dir": 1}
+
+
+def test_cache_hit_reads_through_metafs_on_object_store(spark, objroot,
+                                                        monkeypatch):
+    """On a no-rename root the hit resolves the entry's pointer and reads
+    it with the backend's ``read_parquet_dir`` — one call, on the
+    committed token dir — and never executes the query."""
+    publish_segments(_events(spark, [1, 2]), objroot, "ev", version="v1",
+                     time_column="ts", bucket="DAY")
+    q = {"queryType": "groupBy", "dataSource": "ev",
+         "intervals": ["2024-01-01/2024-01-03"], "granularity": "DAY",
+         "dimensions": ["event_type"], "aggregations": AGGS}
+    filled = cached_druid_query(spark, objroot, "ev", q)
+
+    fs = get_fs(objroot)
+    reads = []
+    real = type(fs).read_parquet_dir
+
+    def spy(self, path, max_bytes=None):
+        reads.append(path)
+        return real(self, path, max_bytes)
+
+    monkeypatch.setattr(type(fs), "read_parquet_dir", spy)
+    monkeypatch.setattr("druid_hadoop_utils_spark.api.druid_query", None)
+    hit = cached_druid_query(spark, objroot, "ev", q)
+    assert len(reads) == 1 and "_result_cache" in reads[0]
+    assert fs.name(reads[0]).count(".") == 1  # the pointer's token dir
+    assert _rows(hit) == _rows(filled) and len(_rows(hit)) == 4
+    assert hit.schema == filled.schema

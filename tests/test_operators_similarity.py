@@ -896,3 +896,29 @@ def test_refresh_ann_index_drift_tolerance(spark, sf_dir, tmp_path):
                   "value": "499"})
     _, r4 = S.refresh_ann_index(spark, root, "emb", **kw)
     assert r4
+
+
+@pytest.mark.parametrize("residual", [False, True])
+def test_fused_assign_encode_equals_separate_udfs(spark, residual):
+    """The fused corpus-side UDF must emit exactly the cell of
+    ``_cell_assign_udf`` (nprobe=1) and the codes of ``_pq_encode_udf``
+    (with centroids in residual mode) — bit-identical, row by row."""
+    import numpy as np
+
+    pts, df = _clustered_df(spark, n=300, n_centers=6, dim=16, seed=5)
+    rng = np.random.RandomState(3)
+    centroids = rng.standard_normal((6, 16))
+    centroids /= np.linalg.norm(centroids, axis=1, keepdims=True)
+    codebooks = rng.standard_normal((4, 8, 4)) * 0.3
+    fused = S._assign_encode_udf(codebooks, centroids, residual)
+    encode = S._pq_encode_udf(codebooks, centroids if residual else None)
+    cells = S._cell_assign_udf(centroids, 1)
+    out = (df.withColumn("f", fused("embedding"))
+             .select("vec_id", "f.cell", "f.code",
+                     cells("embedding")[0].alias("cell_sep"),
+                     encode("embedding").alias("code_sep"))
+             .collect())
+    assert len(out) == 300
+    for r in out:
+        assert r.cell == r.cell_sep
+        assert list(r.code) == list(r.code_sep)
